@@ -15,9 +15,15 @@ column, 2_nws_update.ipynb:1114, attempted exactly this) and
 anti-joined against the existing main table before appending.
 
 Scale: main tables are written partitioned (by ``utc_date`` for the
-weather star) so the anti-join's main-side scan prunes to the partitions
-the staging batch can touch — the incremental batch is small, so Spark
-broadcasts the *staging* side of the anti-join; main is never shuffled.
+weather star), but the anti-join does not prune them. Its main side is a
+full scan of the hash column (the stored ``_row_hash``, or the key
+columns it is recomputed from) with no partition filter, and once main
+has more than 32 partitions (``parallelPartitionDiscovery.threshold``)
+listing them is a parallel-listing job of its own. A left anti join
+builds on its right side, so it is *main's* hash column that is
+broadcast while it fits the broadcast threshold; past that, both sides
+shuffle on the hash. Pruning to the partitions a batch can touch would
+need the partition column to be a function of ``key_cols``.
 """
 
 from __future__ import annotations
@@ -187,12 +193,18 @@ class Warehouse:
         else:
             writer.option("table", spec["target"]).save()
 
-    def table_exists(self, table: str) -> bool:
+    def _try_read(self, table: str) -> DataFrame | None:
+        """``table``, or None when it cannot be read (taken as missing):
+        the existence probe and the read in one schema read."""
         try:
-            self._read_spec(self._spec(table)).schema
-            return True
+            df = self._read_spec(self._spec(table))
+            df.schema
+            return df
         except Exception:
-            return False
+            return None
+
+    def table_exists(self, table: str) -> bool:
+        return self._try_read(table) is not None
 
     def probe_exists(self, table: str) -> bool:
         """Existence probe that DISTINGUISHES missing from transient
@@ -301,8 +313,8 @@ class Warehouse:
             return
 
         keep_hash = store_row_hash
-        if self.table_exists(table):
-            main = self.read(table)
+        main = self._try_read(table)
+        if main is not None:
             if "_row_hash" in main.columns:
                 keep_hash = True  # never fork an existing table's schema
                 existing = main.select("_row_hash")
@@ -310,8 +322,8 @@ class Warehouse:
                 keep_hash = False
                 existing = row_hash(main, key_cols).select("_row_hash")
             if not assume_new:
-                # staging batch is the small side → broadcast it;
-                # main-side scan reads only the hash column (pruned).
+                # a full scan of main's hash column (no partition
+                # filter), the build side of the anti join.
                 staged = staged.join(existing, "_row_hash", "left_anti")
 
         if not keep_hash:
@@ -444,12 +456,13 @@ class Warehouse:
         """
         staged = row_hash(df, key_cols)
         incoming = staged.withColumn(AUDIT_COL, F.current_timestamp())
-        if not self.table_exists(table):
+        main = self._try_read(table)
+        if main is None:
             self._write_spec(
                 incoming.drop("_row_hash"), self._spec(table), "append", partition_col
             )
             return
-        main = row_hash(self.read(table), key_cols)
+        main = row_hash(main, key_cols)
         if partition_col is not None:
             parts = [r[0] for r in df.select(partition_col).distinct().collect()]
             main = main.filter(F.col(partition_col).isin(parts))
@@ -509,7 +522,8 @@ class Warehouse:
             .withColumn("effective_to", F.lit(None).cast("timestamp"))
             .withColumn("is_current", F.lit(True))
         )
-        if not self.table_exists(table):
+        main = self._try_read(table)
+        if main is None:
             self._write_spec(
                 incoming.withColumn("_scd_state", F.lit("current")),
                 spec,
@@ -517,9 +531,7 @@ class Warehouse:
                 "_scd_state",
             )
             return
-        current = self.read(table).filter(F.col("_scd_state") == "current").drop(
-            "_scd_state"
-        )
+        current = main.filter(F.col("_scd_state") == "current").drop("_scd_state")
         new_current, closed = scd2_merge(
             current, df, key_cols=key_cols, attr_cols=attr_cols, as_of=as_of
         )

@@ -17,7 +17,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else this machine's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+DEFAULT_SHUFFLE_PARTITIONS = local_cpus()
 
 
 def get_spark(
@@ -41,7 +47,7 @@ def get_spark(
       - Arrow enabled for the Pandas-UDF escape hatches (similarity
         search, multimodal decode).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -87,7 +93,7 @@ def get_spark(
             "spark.sql.files.minPartitionNum",
             os.environ.get(
                 "SPARK_GRAFT_MIN_PARTITIONS",
-                str(2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
+                str(2 * cpus),
             ),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -55,6 +56,9 @@ NWS_ATTRS = [
 _INT_COLS = ["temperature_f", "dewpoint_f", "wind_chill_f", "surface_wind_mph", "gust", "sky_cover_pct"]
 _FLOAT_COLS = ["precipitation_potential_pct", "relative_humidity_pct"]
 _FLAG_COLS = ["rain", "thunder", "snow", "freezing_rain", "sleet", "fog"]
+
+_LONG_DDL = "location string, last_update string, seq long, attr string, value string"
+_LONG_COLS = ["location", "last_update", "seq", "attr", "value"]
 
 
 def parse_landscape_tables(tables: Iterable[dict[str, Any]]) -> list[tuple]:
@@ -93,10 +97,12 @@ def parse_landscape_tables(tables: Iterable[dict[str, Any]]) -> list[tuple]:
 
 
 def forecast_long_df(spark, tables: Iterable[dict[str, Any]]) -> DataFrame:
-    return spark.createDataFrame(
-        parse_landscape_tables(tables),
-        "location string, last_update string, seq long, attr string, value string",
-    )
+    """The long tuples as a DataFrame. A full scrape is ~56k tuples; they
+    reach the JVM as one Arrow table, not as one pickled and
+    schema-verified row each."""
+    cols = list(zip(*parse_landscape_tables(tables))) or [()] * len(_LONG_COLS)
+    table = pa.Table.from_arrays([pa.array(c) for c in cols], names=_LONG_COLS)
+    return spark.createDataFrame(table, _LONG_DDL)
 
 
 def pivot_forecast(long_df: DataFrame, *, year: int) -> DataFrame:
@@ -106,65 +112,50 @@ def pivot_forecast(long_df: DataFrame, *, year: int) -> DataFrame:
     ``year + 1`` (rollover handled by comparing month to the window's
     first month — the reference's wall-clock year injection could not,
     SURVEY §7.4)."""
+    # a single-aggregate pivot names each column by its pivot value
     wide = (
         long_df.groupBy("location", "last_update", "seq")
         .pivot("attr", NWS_ATTRS)
         .agg(F.first("value"))
+        .toDF("location", "last_update", "seq", *[normalize_column_name(a) for a in NWS_ATTRS])
     )
-    wide = wide.toDF(*[normalize_column_name(c) for c in wide.columns])
 
-    seq_w = Window.partitionBy("location", "last_update").orderBy("seq")
+    upto = Window.partitionBy("location", "last_update").orderBy("seq").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
 
     # W1 forward fill of the sparse Date header row over the explicit seq
     wide = wide.withColumn(
-        "date",
-        F.last(F.nullif(F.trim("date"), F.lit("")), ignorenulls=True).over(
-            seq_w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
+        "date", F.last(F.nullif(F.trim("date"), F.lit("")), ignorenulls=True).over(upto)
     )
 
     month = F.split("date", "/").getItem(0).cast("int")
-    first_month = F.first(month).over(seq_w.rowsBetween(Window.unboundedPreceding, 0))
-    row_year = F.lit(year) + F.when(month < first_month, 1).otherwise(0)
-
-    wide = (
-        wide.withColumn(
-            "lst_datetime",
-            F.to_timestamp_ntz(
-                F.concat_ws(
-                    " ",
-                    F.concat_ws("/", F.col("date"), row_year.cast("string")),
-                    F.concat(F.col("hour_akst").cast("int").cast("string"), F.lit(":00")),
-                ),
-                F.lit("M/d/yyyy H:mm"),
-            ),
-        )
-        .withColumn("utc_datetime", fixed_offset_utc("lst_datetime"))
-        .withColumn(
-            "last_update_nws",
-            F.to_timestamp_ntz("last_update", F.lit("M/d/yyyy H:mm")),
-        )
+    row_year = F.lit(year) + F.when(month < F.first(month).over(upto), 1).otherwise(0)
+    lst = F.to_timestamp_ntz(
+        F.concat_ws(
+            " ",
+            F.concat_ws("/", F.col("date"), row_year.cast("string")),
+            F.concat(F.col("hour_akst").cast("int").cast("string"), F.lit(":00")),
+        ),
+        F.lit("M/d/yyyy H:mm"),
     )
 
     # P8 sentinel fills (reference nws_dag.py:94): '' gust → 0; '' elsewhere → NULL
-    wide = wide.withColumn("gust", F.when(F.trim("gust") == "", "0").otherwise(F.col("gust")))
-    for c in _INT_COLS:
-        wide = wide.withColumn(c, F.nullif(F.trim(c), F.lit("")).cast("bigint"))
-    for c in _FLOAT_COLS:
-        wide = wide.withColumn(c, F.nullif(F.trim(c), F.lit("")).cast("double"))
-    # '--' & co. stay as strings on the outlook flag columns (SURVEY §1.2)
+    def typed(c: str, type_: str):
+        v = F.when(F.trim(c) == "", "0").otherwise(F.col(c)) if c == "gust" else F.col(c)
+        return F.nullif(F.trim(v), F.lit("")).cast(type_).alias(c)
 
+    # '--' & co. stay as strings on the outlook flag columns (SURVEY §1.2)
     out = wide.select(
         "location",
-        "utc_datetime",
-        "lst_datetime",
-        *_INT_COLS[:4],
+        fixed_offset_utc(lst).alias("utc_datetime"),
+        lst.alias("lst_datetime"),
+        *[typed(c, "bigint") for c in _INT_COLS[:4]],
         "wind_dir",
-        "gust",
-        "sky_cover_pct",
-        *_FLOAT_COLS,
+        *[typed(c, "bigint") for c in _INT_COLS[4:]],
+        *[typed(c, "double") for c in _FLOAT_COLS],
         *_FLAG_COLS,
-        "last_update_nws",
+        F.to_timestamp_ntz("last_update", F.lit("M/d/yyyy H:mm")).alias("last_update_nws"),
         "seq",
     )
 

@@ -192,7 +192,9 @@ def get_last_update(html: str, *, page: _PageParser | None = None) -> datetime:
 # ---------------------------------------------------------------------------
 
 
-def extract_forecast_rows(html: str, *, table_index: int = 5) -> list[list[str]]:
+def extract_forecast_rows(
+    html: str, *, table_index: int = 5, page: _PageParser | None = None
+) -> list[list[str]]:
     """Real-HTML counterpart of the reference's ``extract_table_data``
     (utils/utils.py:180-211): take ``find_all("table")[table_index]``,
     drop every row identical to the first (the two colspan dividers
@@ -201,8 +203,9 @@ def extract_forecast_rows(html: str, *, table_index: int = 5) -> list[list[str]]
 
     Returns rows ``[attr, v1, ..., v48]`` — the reference reaches the
     same 48-wide shape via its transpose dict merging first/second-half
-    columns by header name (utils/utils.py:215-231)."""
-    p = parse_page(html)
+    columns by header name (utils/utils.py:215-231). Pass ``page`` (the
+    :func:`parse_page` of ``html``) to skip parsing the page again."""
+    p = page or parse_page(html)
     if len(p.tables) <= table_index:
         raise ValueError(
             f"page has {len(p.tables)} tables; forecast table expected at "
@@ -286,7 +289,7 @@ def fetch_forecast_tables(
                 first_update = page_update
             pages.append(
                 {
-                    "rows": extract_forecast_rows(html, table_index=table_index),
+                    "rows": extract_forecast_rows(html, table_index=table_index, page=page),
                     "last_update": _stamp(page_update),
                 }
             )

@@ -6,9 +6,9 @@ whitespace into 38 fields, and builds a pandas frame (reference
 airflow/dags/uscrn_dag.py:133-206). Here the whole thing is one lazy
 Spark plan over ``spark.read.text``:
 
-    text scan → substring-prefix semi-filter → split → per-field cast
-    → sentinel null / C→F convert → datetime compose → broadcast dim join
-    → deterministic dedup
+    text scan → split → broadcast dim join (prefix filter + station name)
+    → one projection: per-field cast, sentinel null / C→F convert,
+    datetime compose → deterministic dedup
 
 Everything is built-in Catalyst expressions (whole-stage codegen); at
 100 TB the text scan parallelizes by file split and the only shuffle is
@@ -38,7 +38,16 @@ _TEMP_COLS = [
 #: non-temperature measurements: sentinel-nulled only
 _MEASURE_COLS = ["p_calc", "solarad", "solarad_max", "solarad_min", "rh_hr_avg"]
 _FLAG_COLS = [c for c in USCRN_RAW_FIELDS if c.endswith("_flag")]
-_STRING_COLS = {"wbanno", "crx_vn", "sur_temp_type", *_FLAG_COLS}
+_STRING_COLS = {"crx_vn", "sur_temp_type", *_FLAG_COLS}
+#: output columns, in table order
+_ORDER = [
+    "station_location", "wbanno", "crx_vn", "utc_datetime", "lst_datetime",
+    "longitude", "latitude", "t_calc", "t_hr_avg", "t_max", "t_min",
+    "p_calc", "solarad", "solarad_flag", "solarad_max", "solarad_max_flag",
+    "solarad_min", "solarad_min_flag", "sur_temp_type", "sur_temp",
+    "sur_temp_flag", "sur_temp_max", "sur_temp_max_flag", "sur_temp_min",
+    "sur_temp_min_flag", "rh_hr_avg", "rh_hr_avg_flag",
+]
 
 
 def parse_uscrn_lines(
@@ -53,66 +62,44 @@ def parse_uscrn_lines(
 
     ``lines`` must have a string column ``value_col`` (one raw 38-field
     line per row — the shape of ``spark.read.text``). ``locations`` is
-    the 23-row station dim; it is broadcast for both the line-prefix
-    membership filter (S5) and the name join (J1).
+    the 23-row station dim; one broadcast inner join against it is both
+    the line-prefix membership filter (S5) and the name join (J1).
     """
-    toks = F.split(F.trim(F.col(value_col)), r"\s+")
+    line = F.trim(F.col(value_col))
 
-    # line-prefix filter (reference uscrn_dag.py:137-146): broadcast
-    # left-semi join against the dim instead of a driver-side `in` set —
-    # same semantics, no collected allowlist, no shuffle.
-    df = (
-        lines.withColumn("wbanno", F.substring(F.trim(F.col(value_col)), 1, 5))
-        .join(F.broadcast(locations.select("wbanno")), "wbanno", "left_semi")
-        .withColumn("_toks", toks)
-        .filter(F.size("_toks") == len(USCRN_RAW_FIELDS))
-    )
+    def tok(name: str):
+        return F.col("_toks").getItem(USCRN_RAW_FIELDS.index(name))
 
-    cols = []
-    for i, name in enumerate(USCRN_RAW_FIELDS):
-        if name == "wbanno":
-            continue  # already extracted (and validated) above
-        c = F.col("_toks").getItem(i)
+    temp = c_to_f if convert_to_f else nullify_sentinel
+    cols = {
+        "station_location": F.col("station_location"),
+        "wbanno": F.col("wbanno"),
+        "utc_datetime": compose_datetime(tok("utc_date"), tok("utc_time")),
+        "lst_datetime": compose_datetime(tok("lst_date"), tok("lst_time")),
+    }
+    for name in _ORDER:
         if name in _STRING_COLS:
-            c = c.cast("string")
-        elif name in ("utc_date", "utc_time", "lst_date", "lst_time"):
-            c = c.cast("bigint")
-        else:
-            c = c.cast("double")
-        cols.append(c.alias(name))
-    df = df.select("wbanno", *cols)
+            cols[name] = tok(name)
+        elif name in _TEMP_COLS:
+            cols[name] = temp(tok(name).cast("double"))
+        elif name in _MEASURE_COLS:
+            cols[name] = nullify_sentinel(tok(name).cast("double"))
+        elif name not in cols:
+            cols[name] = tok(name).cast("double")
 
-    for c in _TEMP_COLS:
-        df = df.withColumn(c, c_to_f(c) if convert_to_f else nullify_sentinel(c))
-    for c in _MEASURE_COLS:
-        df = df.withColumn(c, nullify_sentinel(c))
-
+    # line-prefix filter (reference uscrn_dag.py:137-146) and station
+    # name (J1) in one broadcast join: a line whose first 5 chars are no
+    # station's WBANNO drops out, as with the reference's `in` set. The
+    # dim adds only the name; the raw line's lon/lat stay. Soil columns
+    # never leave the token array (reference uscrn_dag.py:184).
     df = (
-        df.withColumn("utc_datetime", compose_datetime("utc_date", "utc_time"))
-        .withColumn("lst_datetime", compose_datetime("lst_date", "lst_time"))
-        .drop("utc_date", "utc_time", "lst_date", "lst_time")
+        lines.select(
+            F.substring(line, 1, 5).alias("wbanno"), F.split(line, r"\s+").alias("_toks")
+        )
+        .filter(F.size("_toks") == len(USCRN_RAW_FIELDS))
+        .join(F.broadcast(locations.select("wbanno", "station_location")), "wbanno")
+        .select([cols[c].alias(c) for c in _ORDER])
     )
-
-    # regex anti-projection of soil columns (reference uscrn_dag.py:184)
-    df = df.select([c for c in df.columns if "soil" not in c])
-
-    # J1: broadcast fact↔dim join for station_location + coordinates from
-    # the dim (the raw line's lon/lat stay, dim provides the name).
-    df = df.join(
-        F.broadcast(locations.select("wbanno", "station_location")),
-        "wbanno",
-        "left",
-    )
-
-    order = [
-        "station_location", "wbanno", "crx_vn", "utc_datetime", "lst_datetime",
-        "longitude", "latitude", "t_calc", "t_hr_avg", "t_max", "t_min",
-        "p_calc", "solarad", "solarad_flag", "solarad_max", "solarad_max_flag",
-        "solarad_min", "solarad_min_flag", "sur_temp_type", "sur_temp",
-        "sur_temp_flag", "sur_temp_max", "sur_temp_max_flag", "sur_temp_min",
-        "sur_temp_min_flag", "rh_hr_avg", "rh_hr_avg_flag",
-    ]
-    df = df.select(order)
 
     if dedup:
         # deterministic A5 (reference uscrn_dag.py:198-203 uses pandas

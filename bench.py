@@ -182,7 +182,7 @@ def main() -> None:
     args = ap.parse_args()
     out_path = args.out
 
-    # Ambient loadavg BEFORE the session spins up its 32 threads — lets a
+    # Ambient loadavg BEFORE the session spins up its threads — lets a
     # consumer tell a co-tenant-load artifact from a real regression
     # (README documents the measured ~20% swing; VERDICT r6 #1). The
     # 1-minute value sampled at emit time would mostly read our own run.
@@ -190,13 +190,13 @@ def main() -> None:
     if os.path.basename(out_path) == "BENCH_DETAIL.json":
         require_idle("BENCH_DETAIL.json", loadavg[0], args.force)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
     from alaska_etl_spark.plans.queries import QUERIES
-    from alaska_etl_spark.session import get_spark
+    from alaska_etl_spark.session import get_spark, local_cpus
 
+    cpus = local_cpus()
     spark = get_spark("bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -258,7 +258,7 @@ def main() -> None:
         "value_warm": total_warm,
         "rows": rows,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "loadavg": loadavg,
     }
     with open(out_path, "w") as f:
@@ -277,7 +277,7 @@ def main() -> None:
                 "value_cold": total_cold,
                 "value_warm": total_warm,
                 "sf": sf,
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "loadavg": loadavg,
             }
         )

@@ -13,7 +13,12 @@ import pytest
 
 from alaska_etl_spark.pipelines import run_nws
 from alaska_etl_spark.plans.warehouse import Warehouse
-from alaska_etl_spark.sources.nws import NWS_ATTRS, forecast_long_df, pivot_forecast
+from alaska_etl_spark.sources.nws import (
+    NWS_ATTRS,
+    forecast_long_df,
+    parse_landscape_tables,
+    pivot_forecast,
+)
 from alaska_etl_spark.sources.nws_html import (
     digital_forecast_url,
     extract_forecast_rows,
@@ -149,6 +154,60 @@ def test_mid_grid_refresh_stamps_pages_individually(spark):
     long_df = forecast_long_df(spark, tables)
     stamps = {r.last_update for r in long_df.select("last_update").distinct().collect()}
     assert stamps == {"12/30/2023 15:03", "12/30/2023 16:07"}
+
+
+def test_grid_parses_each_page_once(monkeypatch):
+    """The ``Last Update:`` stamp and the forecast table come from one
+    parse of each fetched page."""
+    from alaska_etl_spark.sources import nws_html
+
+    calls = []
+
+    def counting_parse(html):
+        calls.append(html)
+        return parse_page(html)
+
+    monkeypatch.setattr(nws_html, "parse_page", counting_parse)
+    locs = [("Fairbanks", 64.8378, -147.7164), ("Nome", 64.5, -165.4)]
+    tables = fetch_forecast_tables(_fake_fetch, locs)
+    assert len(tables) == 2
+    assert len(calls) == 3 * len(locs)
+
+
+def test_extract_rows_from_a_parsed_page_matches_html():
+    html = _page(48)
+    assert extract_forecast_rows(html, page=parse_page(html)) == extract_forecast_rows(html)
+
+
+_LONG_SCHEMA = "location string, last_update string, seq long, attr string, value string"
+
+
+def test_forecast_long_df_schema_and_rows(spark):
+    tables = fetch_forecast_tables(_fake_fetch, [("Fairbanks", 64.8378, -147.7164)])
+    df = forecast_long_df(spark, tables)
+    assert df.schema == spark.createDataFrame([], _LONG_SCHEMA).schema
+    assert sorted(df.collect()) == sorted(
+        spark.createDataFrame(parse_landscape_tables(tables), _LONG_SCHEMA).collect()
+    )
+
+
+def test_forecast_long_df_empty(spark):
+    df = forecast_long_df(spark, [])
+    assert df.schema == spark.createDataFrame([], _LONG_SCHEMA).schema
+    assert df.count() == 0
+
+
+def test_forecast_long_df_same_rows_without_arrow(spark):
+    tables = fetch_forecast_tables(_fake_fetch, [("Fairbanks", 64.8378, -147.7164)])
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    with_arrow = sorted(forecast_long_df(spark, tables).collect())
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        without = sorted(forecast_long_df(spark, tables).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert without == with_arrow and len(with_arrow) == 3 * 17 * 48
 
 
 def test_digital_url_carries_all_attribute_params():

@@ -430,3 +430,22 @@ def test_probe_exists_path_and_table_kinds(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(twh, "_read_spec", _transient)
     with pytest.raises(RuntimeError, match="connection reset"):
         twh.probe_exists("t")  # transient error RAISES, never 'absent'
+
+
+def test_append_into_existing_table_reads_main_once(spark, wh, monkeypatch):
+    """``append_main`` reads staging once and main once: the existence
+    probe and the read of main are one schema read."""
+    reads = []
+    real = wh._read_spec
+
+    def counting(spec):
+        reads.append(spec["target"])
+        return real(spec)
+
+    monkeypatch.setattr(wh, "_read_spec", counting)
+    for rows in ([(1, "a", "p1")], [(1, "a", "p1"), (2, "b", "p1")]):
+        reads.clear()
+        wh.load(_batch(spark, rows), "t", key_cols=["k"])  # the first load creates main
+        assert [r.rsplit("/", 1)[-1] for r in reads] == ["t_staging", "t"]
+    monkeypatch.undo()
+    assert wh.read("t").count() == 2
